@@ -74,7 +74,7 @@ class IndexCatalog:
         # table's files and re-reads footers for schema inference —
         # pure per-query overhead for an immutable committed snapshot.
         # Invalidated on every write/commit.
-        self._df_cache: dict[tuple[str, str, int], DataFrame] = {}
+        self._df_cache: dict[tuple[str, str, int, float], DataFrame] = {}
 
     # --- snapshot manifests --------------------------------------------
 
@@ -514,6 +514,14 @@ class IndexCatalog:
         """Like ``read`` but memoizes the DataFrame handle per committed
         snapshot — reuses the resolved file index across queries.  Use
         on the QUERY path only (between writes, ``read`` stays exact).
+        It serves every table a query touches: postings, term_stats and
+        doc_stats (hydration and the filter-stats cache), so a warm
+        search re-lists no table and runs no schema-inference job.
+        Keyed on the snapshot's sequence AND commit time, so every
+        commit moves queries to a fresh handle — also ``drop()`` +
+        rebuild, which restarts the sequence at 1, and a commit made
+        through another ``IndexCatalog`` on the same root, which cannot
+        clear this instance's memo.
 
         Resolves any CRASHED rewrite first (ADVICE r3: without this, a
         delete that died mid-swap would leave queries silently missing
@@ -526,7 +534,8 @@ class IndexCatalog:
             self._df_cache.clear()
         snap = self.current_snapshot()
         key = (spark.sparkContext.applicationId, name,
-               snap["sequence"] if snap else -1)
+               snap["sequence"] if snap else -1,
+               snap.get("committed_at", 0.0) if snap else 0.0)
         df = self._df_cache.get(key)
         if df is None:
             if len(self._df_cache) > 16:

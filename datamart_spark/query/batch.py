@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..analyzer import analyze_query
 from ..index.build import TFN_REF_AVGDL
-from .bm25 import _filtered_doc_ids, idf_map
+from .bm25 import _filtered_doc_ids, checked_snapshot, idf_map
 from .wand import _POSTING_COLS, _topk_from_terms
 
 _BATCH_RESULT_SCHEMA = "query_id string, doc_id long, score double"
@@ -85,12 +85,7 @@ def bm25_topk_batch(
     match (absent AND term, empty analysis, all-pruned) contribute no
     rows — identical to the single-query engine returning empty.
     """
-    snap = catalog.current_snapshot()
-    if snap.get("postings_format", 1) < 2:
-        raise ValueError(
-            "index predates the doclen-in-postings layout (postings_format 2); "
-            "rebuild with build_index(resume=False)"
-        )
+    snap = checked_snapshot(catalog)
     avgdl = snap["avgdl"]
     tfn_ref = float(snap.get("tfn_ref_avgdl", TFN_REF_AVGDL))
     stemming = snap.get("stemming", True)
@@ -104,7 +99,6 @@ def bm25_topk_batch(
             "grouped per query_id, so duplicates would silently merge "
             "two queries' top-k lists"
         )
-    empty = spark.createDataFrame([], _BATCH_RESULT_SCHEMA)
     analyzed: list[tuple[str, list[str], bool, tuple]] = []
     # positional specs: (query_id, term_sets, ordered phrase terms
     # incl. expansions for the idf sum, ctx, slop) — resolved after
@@ -202,7 +196,7 @@ def bm25_topk_batch(
             phrased.append((qid, term_sets, fixed + expansions, ctx, slop))
             all_terms.update(t for ts in term_sets for t in ts)
     if not analyzed and not phrased:
-        return empty
+        return spark.createDataFrame([], _BATCH_RESULT_SCHEMA)
 
     idfs = idf_map(spark, catalog, sorted(all_terms))
 
@@ -252,7 +246,7 @@ def bm25_topk_batch(
             cid = ctx_ids.setdefault(ctx, len(ctx_ids))
         pspecs.append((qid, kept_sets, idf_sum, cid, slop))
     if not specs and not pspecs:
-        return empty
+        return spark.createDataFrame([], _BATCH_RESULT_SCHEMA)
 
     union_terms = sorted(
         {t for _, terms, _, _, _ in specs for t in terms}

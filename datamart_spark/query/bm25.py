@@ -76,6 +76,28 @@ def decode_postings_df(postings: DataFrame) -> DataFrame:
     return postings.mapInPandas(decode, schema=_DECODED_SCHEMA)
 
 
+def checked_snapshot(catalog: IndexCatalog, positional: bool = False) -> dict:
+    """The committed snapshot a block-max query runs against, after the
+    layout checks every entry point shares (keyword, batch, phrase,
+    spans, passages, phrase-prefix): the kernels read the doclen
+    payload (``dls_vb``) that only postings_format 2 writes, and the
+    positional ones also need ``pos_vb``."""
+    snap = catalog.current_snapshot()
+    if snap is None:
+        raise ValueError("no committed snapshot in this catalog")
+    if snap.get("postings_format", 1) < 2:
+        raise ValueError(
+            "index predates the doclen-in-postings layout (postings_format 2); "
+            "rebuild with build_index(resume=False)"
+        )
+    if positional and not snap.get("positions", False):
+        raise ValueError(
+            "phrase queries need a positional index — rebuild with "
+            "build_index(..., positions=True)"
+        )
+    return snap
+
+
 # Hot-term df cache: bounded, keyed per committed snapshot.  Keyed on
 # committed_at (not just the sequence) because catalog.drop() + rebuild
 # restarts sequence numbering at 1 — a long-lived driver must never
@@ -194,7 +216,7 @@ def _cached_filter_stats(spark: SparkSession, catalog: IndexCatalog) -> DataFram
             # process (bench.py, long-lived notebooks)
             if old[0] == key[0]:
                 stale.unpersist()
-        ds = catalog.read(spark, "doc_stats")
+        ds = catalog.read_snapshot(spark, "doc_stats")
         cols = [c for c in ("shard", "doc_id", "lang", "warc_ts") if c in ds.columns]
         from pyspark import StorageLevel
 

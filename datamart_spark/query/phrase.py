@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analyzer import analyze_str, StemCache
 from ..index.varbyte import vb_decode, delta_decode
-from .bm25 import K1, B, idf_map
+from .bm25 import K1, B, checked_snapshot, idf_map
 from .wand import _local_topk, _shard_kernel_job
 
 _RESULT_SCHEMA = "doc_id long, score double"
@@ -439,14 +439,7 @@ def bm25_phrase_topk(
     in-order semantics keep the kernel one vectorized greedy pass."""
     if slop < 0:
         raise ValueError(f"slop must be >= 0, got {slop}")
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
-    if not snap.get("positions", False):
-        raise ValueError(
-            "phrase queries need a positional index — rebuild with "
-            "build_index(..., positions=True)"
-        )
+    snap = checked_snapshot(catalog, positional=True)
     avgdl = snap["avgdl"]
     stemming = snap.get("stemming", True)
     # full ordered token sequence, duplicates preserved (a phrase is a
@@ -454,12 +447,11 @@ def bm25_phrase_topk(
     # used here)
     terms = analyze_str(phrase, StemCache() if stemming else None,
                         tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
     if not terms:
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     idfs = idf_map(spark, catalog, list(dict.fromkeys(terms)))
-    if len(idfs) < len(set(terms)):
-        return empty  # a phrase term with df=0 kills the phrase
+    if len(idfs) < len(set(terms)):  # a phrase term with df=0 kills the phrase
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     idf_sum = float(sum(idfs[t] for t in terms))
     if len(terms) == 1:
         # degenerate single-term phrase ≡ the term query with summed idf
@@ -509,23 +501,15 @@ def _phrase_spans_df(
 ) -> DataFrame:
     """``phrase_spans`` without the final global sort — the join-side
     form ``passages`` consumes."""
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
-    if not snap.get("positions", False):
-        raise ValueError(
-            "phrase queries need a positional index — rebuild with "
-            "build_index(..., positions=True)"
-        )
+    snap = checked_snapshot(catalog, positional=True)
     stemming = snap.get("stemming", True)
     terms = analyze_str(phrase, StemCache() if stemming else None,
                         tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _SPANS_SCHEMA)
     if not terms:
-        return empty
+        return spark.createDataFrame([], _SPANS_SCHEMA)
     idfs = idf_map(spark, catalog, list(dict.fromkeys(terms)))
     if len(idfs) < len(set(terms)):
-        return empty
+        return spark.createDataFrame([], _SPANS_SCHEMA)
     term_sets = [[t] for t in terms]
     m = len(term_sets)
     mask = (1 << 33) - 1
@@ -580,9 +564,7 @@ def passages(
     are indexed, never dropped — so the slice needs no stemmer."""
     if window < 0:
         raise ValueError(f"window must be >= 0, got {window}")
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
+    snap = checked_snapshot(catalog, positional=True)
     tokenizer = snap.get("tokenizer", "simple")
     m = len(analyze_str(phrase, None, tokenizer=tokenizer))
     spans = _phrase_spans_df(spark, catalog, phrase, lang, ts_lo, ts_hi)
@@ -714,20 +696,12 @@ def bm25_phrase_prefix_topk(
     proximity; the expansion set is still the last position)."""
     if slop < 0:
         raise ValueError(f"slop must be >= 0, got {slop}")
-    snap = catalog.current_snapshot()
-    if snap is None:
-        raise ValueError("no committed snapshot in this catalog")
-    if not snap.get("positions", False):
-        raise ValueError(
-            "phrase queries need a positional index — rebuild with "
-            "build_index(..., positions=True)"
-        )
+    snap = checked_snapshot(catalog, positional=True)
     avgdl = snap["avgdl"]
     stemming = snap.get("stemming", True)
     tokens = analyze_str(phrase, None, tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
     if not tokens:
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     prefix = tokens[-1]
     fixed_surface = tokens[:-1]
     if stemming:
@@ -737,12 +711,12 @@ def bm25_phrase_prefix_topk(
         fixed = fixed_surface
     expansions = expand_prefix(spark, catalog, prefix, max_expansions)
     if not expansions:
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     idfs = idf_map(spark, catalog, list(dict.fromkeys(fixed + expansions)))
     # membership, not a count: idfs also holds the expansions, so a
     # df=0 FIXED term would otherwise slip past a size comparison
-    if any(t not in idfs for t in fixed):
-        return empty  # a fixed term with df=0 kills the query
+    if any(t not in idfs for t in fixed):  # a fixed term with df=0 kills the query
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     # MultiPhraseWeight: one TermStatistics entry per fixed position
     # plus one per expansion — a fixed term that is also an expansion
     # counts in both sums

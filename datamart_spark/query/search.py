@@ -6,8 +6,16 @@ time) → non-scoring filter context (lang equality, warc_ts range —
 search/__init__.py:79-105,185-256) → BM25 scoring with AND semantics
 (operator:'and', search/__init__.py:67) → top-k (k=50 default,
 search/base.py:1) → metadata hydration (the reference fetches each
-hit's full document via es.get, join.py:530; here one broadcast-able
-join against doc_stats).
+hit's full document via es.get, join.py:530; here one broadcast join
+against doc_stats).
+
+A warm single search runs three Spark jobs: the term-pruned postings
+scan's map stage (the shuffle into per-shard groups), the per-shard
+kernel whose ≤k merged hits are collected for the broadcast, and the
+hydration take (doc_stats streamed past the broadcast hits into one
+TakeOrderedAndProject).  The driver side adds no job: the snapshot
+manifest, idf lookup and doc_stats handle (``read_snapshot``,
+memoized per snapshot) come from files and memory.
 """
 
 from __future__ import annotations
@@ -76,22 +84,22 @@ def search(
             spark, catalog, query, k=k, lang=lang, ts_lo=ts_lo, ts_hi=ts_hi,
             or_mode=or_mode,
         )
-    meta_cols = [
-        c for c in ("url", "lang", "warc_ts")
-        if c in catalog.read(spark, "doc_stats").columns
-    ]
-    if not meta_cols:
-        return hits.orderBy(F.desc("score"), F.asc("doc_id"))
-    meta = catalog.read(spark, "doc_stats").select("doc_id", *meta_cols)
-    # broadcast the ≤k-row hits side: doc_stats (10^12 rows at target
-    # scale) must never be shuffled to hydrate 50 hits — the broadcast
-    # hash join streams doc_stats partitions map-side (plan-asserted in
-    # tests/test_plans.py)
-    return (
-        F.broadcast(hits).join(meta, "doc_id")
-        .select("doc_id", *meta_cols, "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    ds = catalog.read_snapshot(spark, "doc_stats")
+    meta_cols = [c for c in ("url", "lang", "warc_ts") if c in ds.columns]
+    if meta_cols:
+        # broadcast the ≤k-row hits side: doc_stats (10^12 rows at
+        # target scale) must never be shuffled to hydrate 50 hits — the
+        # broadcast hash join streams doc_stats partitions map-side
+        # (plan-asserted in tests/test_plans.py)
+        hits = (
+            F.broadcast(hits).join(ds.select("doc_id", *meta_cols), "doc_id")
+            .select("doc_id", *meta_cols, "score")
+        )
+    # sort+limit compiles to ONE TakeOrderedAndProject job; a bare
+    # orderBy would range-partition the join output (a map stage over
+    # doc_stats, a sampling job scanning it again, then the result job)
+    # to order ≤k rows.  The limit drops nothing: hits are already ≤k.
+    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_many(
@@ -101,26 +109,23 @@ def search_many(
     k: int = TOP_K_SIZE,
 ) -> DataFrame:
     """Bulk ranked search: the whole query batch (per-query AND/OR mode
-    and lang/ts filters — see ``bm25_topk_batch``) in ONE job, hydrated
-    with one broadcast join.  Returns (query_id, doc_id, url, lang,
-    warc_ts, score), each query's hits ordered (score desc, doc_id
-    asc).  The reference answers one ``POST /api/v1/search`` per HTTP
+    and lang/ts filters — see ``bm25_topk_batch``) in ONE postings
+    scan, hydrated with one broadcast join.  Returns (query_id, doc_id,
+    url, lang, warc_ts, score), each query's hits ordered (score desc,
+    doc_id asc).  The reference answers one ``POST /api/v1/search`` per HTTP
     request; a bulk evaluation client looping that endpoint pays N
     round-trips + N ES requests — this is the engine-side batch form
     of the same semantics (apiserver/apiserver/search/__init__.py:
     429-604 per query, rank-identical per tests/test_batch_queries.py).
     """
     hits = bm25_topk_batch(spark, catalog, queries, k=k)
-    meta_cols = [
-        c for c in ("url", "lang", "warc_ts")
-        if c in catalog.read(spark, "doc_stats").columns
-    ]
+    ds = catalog.read_snapshot(spark, "doc_stats")
+    meta_cols = [c for c in ("url", "lang", "warc_ts") if c in ds.columns]
     if not meta_cols:
         return hits
-    meta = catalog.read(spark, "doc_stats").select("doc_id", *meta_cols)
     # hits ≤ k·Q rows — broadcast it; doc_stats is never shuffled
     return (
-        F.broadcast(hits).join(meta, "doc_id")
+        F.broadcast(hits).join(ds.select("doc_id", *meta_cols), "doc_id")
         .select("query_id", "doc_id", *meta_cols, "score")
         .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
     )

@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analyzer import analyze_query
 from ..index.varbyte import vb_decode, delta_decode
-from .bm25 import K1, B, idf_map, _filtered_doc_ids
+from .bm25 import K1, B, checked_snapshot, idf_map, _filtered_doc_ids
 
 #: fixed reference avgdl the baked per-block max_tfn is quantized at —
 #: single definition in index.build (ADVICE r3: a drifted duplicate
@@ -358,12 +358,7 @@ def bm25_topk_blockmax(
     ts_hi=None,
     or_mode: bool = False,
 ) -> DataFrame:
-    snap = catalog.current_snapshot()
-    if snap.get("postings_format", 1) < 2:
-        raise ValueError(
-            "index predates the doclen-in-postings layout (postings_format 2); "
-            "rebuild with build_index(resume=False)"
-        )
+    snap = checked_snapshot(catalog)
     avgdl = snap["avgdl"]
     # the reference avgdl qmax_tfn was baked at — from the manifest, so
     # an index built by a different code version can never be silently
@@ -372,16 +367,15 @@ def bm25_topk_blockmax(
     stemming = snap.get("stemming", True)
     terms = analyze_query(query, stemming=stemming,
                           tokenizer=snap.get("tokenizer", "simple"))
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
     if not terms:
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     idfs = idf_map(spark, catalog, terms)
     if not or_mode and len(idfs) < len(terms):
-        return empty
+        return spark.createDataFrame([], _RESULT_SCHEMA)
     if or_mode:
         terms = [t for t in terms if t in idfs]
         if not terms:
-            return empty
+            return spark.createDataFrame([], _RESULT_SCHEMA)
 
     n_terms = len(terms)
     local = _shard_kernel_job(

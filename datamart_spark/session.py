@@ -15,7 +15,11 @@ Every knob here matters at scale:
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import tempfile
+import time
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -24,28 +28,59 @@ from pyspark.sql import SparkSession
 def package_zip(dest_dir: str = "/tmp") -> str:
     """Zip this package for executor shipping — the local-mode analog of
     ``spark-submit --py-files datamart_spark.zip`` (north rule: runs via
-    spark-submit --py-files on multi-executor clusters)."""
+    spark-submit --py-files on multi-executor clusters).
+
+    The zip is named by a hash of the package's ``.py`` paths and
+    contents, so a zip is reused only by the exact sources it was built
+    from: two checkouts on one host (or an edited tree) never ship each
+    other's UDF code, whatever the mtimes say.  It is written through a
+    per-process temp file and renamed into place, so concurrent
+    sessions never write the same file.
+
+    Every distinct source tree leaves one zip in ``dest_dir``.  Reusing
+    a zip refreshes its mtime, and writing a new one removes the
+    ``datamart_spark_pkg-*.zip`` siblings no session has used for a
+    day; a recent one may belong to another live checkout."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(dest_dir, "datamart_spark_pkg.zip")
-    mtimes = [
-        os.path.getmtime(os.path.join(root, f))
+    sources = sorted(
+        os.path.relpath(os.path.join(root, f), pkg_dir)
         for root, _, files in os.walk(pkg_dir)
         for f in files
         if f.endswith(".py")
-    ]
-    if os.path.exists(out) and os.path.getmtime(out) >= max(mtimes):
+    )
+    blobs = []
+    digest = hashlib.sha256()
+    for rel in sources:
+        with open(os.path.join(pkg_dir, rel), "rb") as f:
+            data = f.read()
+        blobs.append((rel, data))
+        digest.update(rel.encode() + b"\0" + data + b"\0")
+    out = os.path.join(
+        dest_dir, f"datamart_spark_pkg-{digest.hexdigest()[:16]}.zip"
+    )
+    if os.path.exists(out):
+        try:
+            os.utime(out)
+        except OSError:
+            pass  # another user's zip: reuse it as it is
         return out
-    tmp = out + ".tmp"
-    with zipfile.ZipFile(tmp, "w") as z:
-        for root, _, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "datamart_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    z.write(full, rel)
-    os.replace(tmp, out)
+    fd, tmp = tempfile.mkstemp(dir=dest_dir, suffix=".zip.tmp")
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+            for rel, data in blobs:
+                z.writestr(os.path.join("datamart_spark", rel), data)
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would lock out other users
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+    stale = time.time() - 24 * 3600
+    for old in glob.glob(os.path.join(dest_dir, "datamart_spark_pkg-*.zip")):
+        try:
+            if os.stat(old).st_mtime < stale:
+                os.remove(old)
+        except OSError:
+            pass  # gone already, or not ours to remove
     return out
 
 
